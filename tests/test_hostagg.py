@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from webdq import hostagg, oracle
-from webdq.pipeline import PipelineConfig, extract_features
+from webdq.pipeline import PipelineConfig, extract_features, run_pipeline
 from webdq.synth import generate_pages
 
 
@@ -128,3 +128,25 @@ def test_host_col_pathless_and_scheme_case(spark):
     )
     got = [r[0] for r in df.select(hostagg.host_col()).collect()]
     assert got == ["example.com", "Example.org", "a.b", "q.example"]
+
+
+def test_library_calls_leave_session_conf_alone(spark, host_pages, monkeypatch):
+    """run_pipeline and cluster_hosts run under the caller's conf: a
+    ``spark.conf.set`` inside them would be seen by every other query
+    running on the same session meanwhile."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    def refuse(self, key, value=None):
+        raise AssertionError(f"library call set session conf {key}={value}")
+
+    pages = host_pages.drop("_tier")
+    hosts = hostagg.host_metadata(extract_features(pages, PipelineConfig())).cache()
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    labels = run_pipeline(spark, pages, PipelineConfig(k=5))
+    assert labels.count() == host_pages.count()
+    persisted = []
+    clustered, _, km = hostagg.cluster_hosts(hosts, k=4, persisted=persisted)
+    assert clustered.count() == hosts.count() and km.centers.shape[0] == 4
+    for d in persisted:
+        d.unpersist()
+    hosts.unpersist()

@@ -2,11 +2,22 @@
 pandas/statsmodels semantics (SURVEY.md W5, §7.3)."""
 
 import numpy as np
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from webdq import normalize, oracle
 from webdq.synth import generate_pages
 from webdq.textstats import heuristic_features
+
+
+def ecdf_naive(df: DataFrame, cols: list[str], prefix: str = "u_") -> DataFrame:
+    """cume_dist over a global window — correct, but a single-partition
+    sort per column: the small-data reference ``normalize.ecdf`` is
+    tested against."""
+    out = df
+    for c in cols:
+        out = out.withColumn(prefix + c.removeprefix("n_"), F.cume_dist().over(Window.orderBy(F.col(c))))
+    return out
 
 
 def _ecdf_frames(spark):
@@ -18,7 +29,7 @@ def test_ecdf_matches_naive_and_pandas(spark):
     df = _ecdf_frames(spark).cache()
     cols = ["n_chars", "n_words", "mean_word_len"]
     fast = normalize.ecdf(df, cols, key_col="url").toPandas().sort_values("url").reset_index(drop=True)
-    naive = normalize.ecdf_naive(df, cols).toPandas().sort_values("url").reset_index(drop=True)
+    naive = ecdf_naive(df, cols).toPandas().sort_values("url").reset_index(drop=True)
     pdf = df.toPandas().sort_values("url").reset_index(drop=True)
     for c in cols:
         out = "u_" + c.removeprefix("n_")
@@ -66,32 +77,31 @@ def test_ecdf_paths_agree(spark):
         assert (a[c] == b[c]).all(), c
 
 
-def test_ecdf_melt_path_matches_direct(spark):
-    """>3 high-card columns fall back to the melted one-shuffle-serves-
-    all path — it must agree exactly with the direct per-column window
-    path and with the pandas oracle."""
-    df = _ecdf_frames(spark).withColumn(
-        "jitter", (F.xxhash64("url") % 100000) / 7.0
-    ).cache()
-    cols = ["n_chars", "n_words", "mean_word_len", "jitter"]
-    melt = (
-        normalize.ecdf(df, cols, key_col="url", low_card_threshold=1)  # all 4 high → melt
+def test_ecdf_many_high_card_columns_with_nulls(spark):
+    """More than 3 continuous columns, some null-bearing, all on the
+    bucketed window path — exact against the pandas oracle (nulls rank
+    lowest and tie, cume_dist semantics)."""
+    df = (
+        _ecdf_frames(spark)
+        .withColumn("jitter", (F.xxhash64("url") % 100000) / 7.0)
+        .withColumn(
+            "holes",
+            F.when(F.xxhash64("url", F.lit(1)) % 5 == 0, F.lit(None)).otherwise(F.col("mean_word_len") * 3.0),
+        )
+        .cache()
+    )
+    cols = ["n_chars", "n_words", "mean_word_len", "jitter", "holes"]
+    got = (
+        normalize.ecdf(df, cols, key_col="url", low_card_threshold=1)  # all 5 high-card
         .toPandas().set_index("url").sort_index()
     )
     pdf = df.toPandas().set_index("url").sort_index()
+    assert pdf["holes"].isna().any()
     for c in cols:
         u = "u_" + c.removeprefix("n_")
-        np.testing.assert_allclose(
-            melt[u].to_numpy(), oracle.ecdf_pd(pdf[c].to_numpy()), rtol=1e-12, err_msg=u
-        )
-    # direct path on a 3-col subset agrees with the melt run
-    direct = (
-        normalize.ecdf(df, cols[:3], key_col="url", low_card_threshold=1)
-        .toPandas().set_index("url").sort_index()
-    )
-    for c in cols[:3]:
-        u = "u_" + c.removeprefix("n_")
-        assert (melt[u] == direct[u]).all(), u
+        # nulls arrive as NaN; -inf makes them the lowest tied peer group
+        x = np.nan_to_num(pdf[c].to_numpy(dtype=float), nan=-np.inf)
+        np.testing.assert_allclose(got[u].to_numpy(), oracle.ecdf_pd(x), rtol=1e-12, err_msg=u)
 
 
 def test_ecdf_reprobe_path_exact(spark):
@@ -105,7 +115,7 @@ def test_ecdf_reprobe_path_exact(spark):
         normalize.ecdf(df, cols, key_col="url", low_card_threshold=1, probe_buckets=16)
         .toPandas().sort_values("url").reset_index(drop=True)
     )
-    naive = normalize.ecdf_naive(df, cols).toPandas().sort_values("url").reset_index(drop=True)
+    naive = ecdf_naive(df, cols).toPandas().sort_values("url").reset_index(drop=True)
     for c in cols:
         out = "u_" + c.removeprefix("n_")
         np.testing.assert_allclose(fast[out], naive[out], rtol=1e-12, err_msg=out)

@@ -15,8 +15,9 @@ get a bucket id with a pure expression, per-bucket cumulative offsets
 and broadcast back as a literal map, and the within-bucket "count of
 rows ≤ x" is a RANGE-frame window partitioned BY BUCKET — every
 partition sorts independently. ECDF = (offset + within) / N, an exact
-integer ratio. All features are normalized in ONE shuffle by melting
-to long format first (SURVEY.md §4 "one shuffle serves all windows").
+integer ratio. The two probe jobs are shared by all features; each
+continuous feature then gets one bucket-partitioned window on the wide
+frame itself (no melt, no pivot, no key join-back).
 """
 
 from __future__ import annotations
@@ -36,16 +37,6 @@ def ratio_normalize(df: DataFrame, cols: list[str], total_col: str, prefix: str 
     return df.withColumns(out)
 
 
-def ecdf_naive(df: DataFrame, cols: list[str], prefix: str = "u_") -> DataFrame:
-    """cume_dist over a global window — correct, but single-partition
-    sort per column. Kept as the small-data reference implementation
-    that ``ecdf`` is tested against."""
-    out = df
-    for c in cols:
-        out = out.withColumn(prefix + c.removeprefix("n_"), F.cume_dist().over(Window.orderBy(F.col(c))))
-    return out
-
-
 def ecdf(
     df: DataFrame,
     cols: list[str],
@@ -56,7 +47,6 @@ def ecdf(
     low_card_threshold: int = 65536,
     probe_buckets: int = 256,
     stats_out: dict | None = None,
-    persist_input: bool = False,
 ) -> DataFrame:
     """Exact, parallel ECDF for every column in ``cols``. Output column
     name: ``prefix + col`` (n_ stripped, matching the reference's
@@ -69,12 +59,14 @@ def ecdf(
       shuffles of the big table, scales linearly. At 10^12 docs a
       bounded feature like n_words stays low-cardinality forever.
     - HIGH-cardinality columns (continuous scores): the bucketed
-      melt/window path below. ``n_buckets=0`` (default) scales the
-      bucket count with input size — max(64, n/1M), capped at 4096 —
-      so a per-(feature,bucket) window partition stays ≤ ~1M rows at
-      any input scale instead of n/64.
+      window path below, one column at a time on the wide frame.
+      ``n_buckets=0`` (default) scales the bucket count with input
+      size — max(64, n/1M), capped at 4096 — so a per-(feature,bucket)
+      window partition stays ≤ ~1M rows at any input scale instead of
+      n/64.
     Both are exact: ECDF(x) = count(X ≤ x)/N. Nulls rank lowest and
-    tie (cume_dist semantics) on every path.
+    tie (cume_dist semantics) on every path. Rows are never re-keyed,
+    so ``key_col`` is not read; it stays in the signature for callers.
 
     TWO probe jobs total, regardless of feature count (driver
     round-trips are the non-scaling cost at high parallelism):
@@ -93,15 +85,6 @@ def ecdf(
     # probe can size its percentile list; corrected below if the auto
     # bucket count outgrows it (``probe_buckets`` is an internal knob —
     # tests shrink it to exercise the re-probe path at small scale)
-    # ecdf makes 2-3 passes over ``df`` (probe job, fused-counts job,
-    # final plan). Callers whose input is an un-materialized scan or
-    # derivation pass ``persist_input=True`` so the passes after the
-    # first read the cache instead of recomputing (r7; measured ~25%
-    # on the headline ECDF query whose input is an unsplittable
-    # single-row-group scan). The pipeline path leaves it off — its
-    # features stage is already persisted by the StageRunner.
-    if persist_input:
-        df = df.persist()
     probe_buckets = n_buckets if n_buckets > 0 else probe_buckets
     qs = [i / probe_buckets for i in range(1, probe_buckets)]
     # cardinality rsd 0.05 (not 0.02): the estimate only picks the
@@ -161,18 +144,15 @@ def ecdf(
     # an array-filter HOF here is interpreted and re-evaluated per
     # reference). Equal values always land in the same bucket; null
     # comparisons fall through every WHEN → bucket 0 (nulls lowest).
-    def bucket_expr_on(col, bs: list[float], lo: int, hi: int):
+    def bucket_expr(col, bs: list[float], lo: int, hi: int):
         # returns #boundaries in bs[lo:hi] strictly below col, offset lo
         if lo >= hi:
             return F.lit(lo)
         mid = (lo + hi) // 2
         return (
-            F.when(col > F.lit(bs[mid]), bucket_expr_on(col, bs, mid + 1, hi))
-            .otherwise(bucket_expr_on(col, bs, lo, mid))
+            F.when(col > F.lit(bs[mid]), bucket_expr(col, bs, mid + 1, hi))
+            .otherwise(bucket_expr(col, bs, lo, mid))
         )
-
-    def bucket_expr(bs: list[float], lo: int, hi: int):
-        return bucket_expr_on(F.col("_v"), bs, lo, hi)
 
     # fused counts job: melt EVERY ecdf column once; low-card columns
     # group by raw value, high-card by bucket id. One aggregation
@@ -181,7 +161,7 @@ def ecdf(
     melted = df.select(F.expr(f"stack({len(cols)}, {stack_all}) as (_f, _v)"))
     g = F.col("_v")
     for c in high:
-        g = F.when(F.col("_f") == c, bucket_expr(bounds[c], 0, len(bounds[c])).cast("double")).otherwise(g)
+        g = F.when(F.col("_f") == c, bucket_expr(F.col("_v"), bounds[c], 0, len(bounds[c])).cast("double")).otherwise(g)
     # Driver-size bound of this collect: low-card columns contribute
     # ≤ low_card_threshold rows each, high-card ≤ n_buckets (4096 cap)
     # — worst case low_card_threshold × n_cols ≈ 65k × #features. With
@@ -217,107 +197,35 @@ def ecdf(
             out = out.withColumn(
                 u, F.when(F.col(c).isNull(), F.lit(n_null_c / n_rows)).otherwise(F.col(u))
             )
-    if not high:
-        return out
-    df_high = out
 
-    # per-(feature,bucket) cumulative offsets from the fused counts
-    per_feat: dict[str, dict[int, int]] = {}
-    n_total: dict[str, int] = {}
-    for f_name in high:
-        per_feat[f_name] = {int(gv): cnt for gv, cnt in by_col[f_name]}
-    offsets: dict[str, dict[int, int]] = {}
-    for f_name, bc in per_feat.items():
-        n_total[f_name] = sum(bc.values())
-        acc = 0
-        offsets[f_name] = {}
-        for bkt in sorted(bc):
-            offsets[f_name][bkt] = acc
-            acc += bc[bkt]
-    spark = df.sparkSession
-
-    if len(high) <= 3:
-        # DIRECT path (few continuous features — the common pipeline
-        # shape): per column, bucket-assign on the wide frame itself,
-        # broadcast-join the (bucket → offset) dim, and run ONE
-        # RANGE-frame window partitioned by bucket. The chained
-        # windows pipeline as shuffle→sort→shuffle→sort inside a
-        # single job — no melt, no pivot, no key join-back (the melt
-        # path costs 2 long-format shuffles PLUS a join that reshuffles
-        # the wide frame anyway; measured the worst scaler in r1).
-        out2 = df_high
-        for c in high:
-            u = prefix + c.removeprefix("n_")
-            bcol, ocol, ncol = f"_b_{u}", f"_below_{u}", f"_nf_{u}"
-            out2 = out2.withColumn(bcol, bucket_expr_on(F.col(c), bounds[c], 0, len(bounds[c])))
-            off_df = spark.createDataFrame(
-                [(bkt, off, n_total[c]) for bkt, off in offsets[c].items()],
-                f"`{bcol}` int, `{ocol}` long, `{ncol}` long",
-            )
-            out2 = out2.join(F.broadcast(off_df), bcol)
-            w = (
-                Window.partitionBy(bcol)
-                .orderBy(F.col(c))
-                .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            out2 = out2.withColumn(
-                u,
-                (F.col(ocol) + F.count(F.lit(1)).over(w)).cast("double") / F.col(ncol).cast("double"),
-            ).drop(bcol, ocol, ncol)
-        return out2
-
-    cols = high
-    # 2. melt to long: one row per (key, feature, value). Only the key
-    #    and the numeric columns travel through the ECDF shuffles —
-    #    callers must NOT pass wide payload columns here.
-    stack_expr = ", ".join(f"'{c}', `{c}`" for c in cols)
-    long = df.select(
-        F.col(key_col).alias("_k"),
-        F.expr(f"stack({len(cols)}, {stack_expr}) as (_f, _v)"),
-    )
-    b = F.lit(0)
-    for c in cols:
-        b = F.when(F.col("_f") == c, bucket_expr(bounds[c], 0, len(bounds[c]))).otherwise(b)
-    # No persist here: the melt + CASE tree are narrow codegen'd ops
-    # over an input the caller typically already persisted — recomputing
-    # them once is cheaper than a cache write/read of n×features rows
-    # and avoids an unbounded persist (VERDICT r1 "unbounded persists").
-    long = long.withColumn("_b", b)
-
-    # broadcast-joined offsets table (≤ n_buckets × n_features rows):
-    # a literal map column would be re-CONSTRUCTED per row (measured
-    # hot); a broadcast hash join costs one probe per row.
-    off_rows = [
-        (f_name, bkt, offsets[f_name][bkt], n_total[f_name])
-        for f_name, bc in per_feat.items()
-        for bkt in bc
-    ]
-    off_df = spark.createDataFrame(off_rows, "_f string, _b int, _below long, _nf long")
-    long = long.join(F.broadcast(off_df), ["_f", "_b"])
-
-    # 5. within-bucket count of rows with value <= current: RANGE frame
-    w = (
-        Window.partitionBy("_f", "_b")
-        .orderBy(F.col("_v"))
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    long = long.withColumn(
-        "_ecdf",
-        (F.col("_below") + F.count(F.lit(1)).over(w)).cast("double") / F.col("_nf").cast("double"),
-    )
-
-    # 6. pivot back to wide and join on the key (both sides already
-    #    hash-partitioned by _k/key after the pivot shuffle)
-    wide = (
-        long.groupBy("_k")
-        .pivot("_f", cols)
-        .agg(F.first("_ecdf"))
-        .select(
-            F.col("_k"),
-            *[F.col(c).alias(prefix + c.removeprefix("n_")) for c in cols],
+    # Continuous columns, one at a time on the wide frame: bucket-assign
+    # with the CASE tree, broadcast-join the (bucket → rows in lower
+    # buckets) dim, and run ONE RANGE-frame window partitioned by
+    # bucket. The chained windows pipeline as shuffle→sort→shuffle→sort
+    # inside a single job. (A melt → window → pivot → key join-back
+    # form pays 2 long-format shuffles PLUS a join that reshuffles the
+    # wide frame: measured 21.6 s vs 10.9 s median with 4 continuous
+    # columns over 1M rows on local[4], identical values.)
+    for c in high:
+        u = prefix + c.removeprefix("n_")
+        bcol, ocol = f"_b_{u}", f"_below_{u}"
+        acc, off_rows = 0, []
+        for bkt, cnt in sorted((int(gv), cnt) for gv, cnt in by_col[c]):
+            off_rows.append((bkt, acc))
+            acc += cnt
+        off_df = df.sparkSession.createDataFrame(off_rows, f"`{bcol}` int, `{ocol}` long")
+        out = out.withColumn(bcol, bucket_expr(F.col(c), bounds[c], 0, len(bounds[c])))
+        out = out.join(F.broadcast(off_df), bcol)
+        w = (
+            Window.partitionBy(bcol)
+            .orderBy(F.col(c))
+            .rangeBetween(Window.unboundedPreceding, Window.currentRow)
         )
-    )
-    return df_high.join(wide, on=df_high[key_col] == wide["_k"], how="inner").drop("_k")
+        out = out.withColumn(
+            u, (F.col(ocol) + F.count(F.lit(1)).over(w)).cast("double") / F.lit(float(n_rows))
+        ).drop(bcol, ocol)
+    return out
+
 
 def winsorize(
     df: DataFrame,

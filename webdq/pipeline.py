@@ -23,7 +23,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,7 +68,6 @@ class PipelineConfig:
     kmeans_max_iter: int = 25
     kmeans_init_sample: int = 4096
     seed: int = 42
-    extra: dict = field(default_factory=dict)
 
 
 class StageRunner:
