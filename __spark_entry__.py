@@ -67,14 +67,14 @@ def entry(spark: SparkSession) -> DataFrame:
     """Quality-filter the sf0.001 documents table adapted to the pages
     schema; returns (url, cluster, keep, scrubbed_text)."""
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-    cfg = PipelineConfig(k=4, pca_components=3, kmeans_init_sample=256, keep_top=1)
+    cfg = PipelineConfig(k=4, pca_components=3, kmeans_init_sample=256)
     return run_pipeline(spark, pages, cfg)
 
 
 def q00_quality_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-SQL-expressible (PCA+KMeans) — driver records rows-only."""
     pages = pages_from_documents(spark, sf_dir)
-    cfg = PipelineConfig(k=4, pca_components=3, kmeans_init_sample=512, keep_top=1)
+    cfg = PipelineConfig(k=4, pca_components=3, kmeans_init_sample=512)
     return run_pipeline(spark, pages, cfg)
 
 
@@ -166,9 +166,7 @@ def _q00b_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("lang_match"),
     )
-    return normalize.ecdf(
-        feats, ["n_chars", "n_words", "mean_word_len"], key_col="doc_id", prefix="u_"
-    )
+    return normalize.ecdf(feats, ["n_chars", "n_words", "mean_word_len"], prefix="u_")
 
 
 def q00b_quality_pipeline_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -416,7 +414,7 @@ FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate)
 
 def q05_ecdf(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").select("o_orderkey", F.col("o_totalprice").alias("n_totalprice"))
-    out = normalize.ecdf(o, ["n_totalprice"], key_col="o_orderkey", prefix="u_")
+    out = normalize.ecdf(o, ["n_totalprice"], prefix="u_")
     return out.select("o_orderkey", "u_totalprice")
 
 
@@ -1375,7 +1373,7 @@ FROM orders GROUP BY 1, 2
 
 def q42_host_agg(spark, sf_dir):
     from webdq import hostagg
-    from webdq.pipeline import PipelineConfig, extract_features
+    from webdq.pipeline import extract_features
     from webdq.synth import pages_from_documents
 
     # spread=False: host_metadata prunes the heavy scorer UDFs out of
@@ -1383,7 +1381,7 @@ def q42_host_agg(spark, sf_dir):
     # the per-row work is light and the spread shuffle is a measured
     # small net loss here (0.66 vs 0.89 s warm at sf1.0)
     pages = pages_from_documents(spark, sf_dir, spread=False)
-    h = hostagg.host_metadata(extract_features(pages, PipelineConfig()))
+    h = hostagg.host_metadata(extract_features(pages))
     return h.select(
         "host",
         "n_pages",

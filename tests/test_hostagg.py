@@ -18,7 +18,7 @@ def host_pages(spark):
 
 
 def test_host_metadata_matches_pandas(spark, host_pages):
-    feats = extract_features(host_pages.drop("_tier"), PipelineConfig())
+    feats = extract_features(host_pages.drop("_tier"))
     got = hostagg.host_metadata(feats).toPandas().set_index("host").sort_index()
 
     pdf = host_pages.select("url", "warc_ts", "text", "lang").toPandas()
@@ -140,7 +140,7 @@ def test_library_calls_leave_session_conf_alone(spark, host_pages, monkeypatch):
         raise AssertionError(f"library call set session conf {key}={value}")
 
     pages = host_pages.drop("_tier")
-    hosts = hostagg.host_metadata(extract_features(pages, PipelineConfig())).cache()
+    hosts = hostagg.host_metadata(extract_features(pages)).cache()
     monkeypatch.setattr(RuntimeConfig, "set", refuse)
     labels = run_pipeline(spark, pages, PipelineConfig(k=5))
     assert labels.count() == host_pages.count()

@@ -195,9 +195,9 @@ def test_pipeline_fused_sample_same_kmeans(spark):
 
     pages = generate_pages(spark, 1500).drop("_tier")
     cfg = P.PipelineConfig(k=4, pca_components=3, kmeans_init_sample=128, kmeans_max_iter=5)
-    feats = P.extract_features(pages, cfg).persist()
+    feats = P.extract_features(pages).persist()
     nstats: dict = {}
-    norm = P.normalize_features(feats, cfg, nstats).persist()
+    norm = P.normalize_features(feats, nstats).persist()
     assert nstats["n_rows"] == 1500
     out_hint, _, _, _, km_hint = P.cluster_documents(norm, cfg, approx_rows=nstats["n_rows"])
     out_base, _, _, _, km_base = P.cluster_documents(norm, cfg, approx_rows=None)

@@ -28,7 +28,7 @@ def _ecdf_frames(spark):
 def test_ecdf_matches_naive_and_pandas(spark):
     df = _ecdf_frames(spark).cache()
     cols = ["n_chars", "n_words", "mean_word_len"]
-    fast = normalize.ecdf(df, cols, key_col="url").toPandas().sort_values("url").reset_index(drop=True)
+    fast = normalize.ecdf(df, cols).toPandas().sort_values("url").reset_index(drop=True)
     naive = ecdf_naive(df, cols).toPandas().sort_values("url").reset_index(drop=True)
     pdf = df.toPandas().sort_values("url").reset_index(drop=True)
     for c in cols:
@@ -40,7 +40,7 @@ def test_ecdf_matches_naive_and_pandas(spark):
 def test_ecdf_properties(spark):
     """Monotone in the value, range (0, 1], max == 1 (SURVEY.md §5.2.5)."""
     df = _ecdf_frames(spark)
-    out = normalize.ecdf(df, ["n_chars"], key_col="url").toPandas().sort_values("n_chars")
+    out = normalize.ecdf(df, ["n_chars"]).toPandas().sort_values("n_chars")
     u = out["u_chars"].to_numpy()
     assert (np.diff(u) >= -1e-12).all()
     assert u.min() > 0 and abs(u.max() - 1.0) < 1e-12
@@ -48,8 +48,8 @@ def test_ecdf_properties(spark):
 
 def test_ecdf_partition_invariance(spark):
     df = _ecdf_frames(spark)
-    a = normalize.ecdf(df.repartition(1), ["n_words"], key_col="url").toPandas().set_index("url")["u_words"]
-    b = normalize.ecdf(df.repartition(16), ["n_words"], key_col="url").toPandas().set_index("url")["u_words"]
+    a = normalize.ecdf(df.repartition(1), ["n_words"]).toPandas().set_index("url")["u_words"]
+    b = normalize.ecdf(df.repartition(16), ["n_words"]).toPandas().set_index("url")["u_words"]
     assert (a.sort_index() == b.sort_index()).all()
 
 
@@ -66,11 +66,11 @@ def test_ecdf_paths_agree(spark):
     df = _ecdf_frames(spark).cache()
     cols = ["n_chars", "n_words"]
     a = (
-        normalize.ecdf(df, cols, key_col="url", low_card_threshold=1)
+        normalize.ecdf(df, cols, low_card_threshold=1)
         .toPandas().set_index("url").sort_index()
     )
     b = (
-        normalize.ecdf(df, cols, key_col="url", low_card_threshold=10_000_000)
+        normalize.ecdf(df, cols, low_card_threshold=10_000_000)
         .toPandas().set_index("url").sort_index()
     )
     for c in ["u_chars", "u_words"]:
@@ -92,7 +92,7 @@ def test_ecdf_many_high_card_columns_with_nulls(spark):
     )
     cols = ["n_chars", "n_words", "mean_word_len", "jitter", "holes"]
     got = (
-        normalize.ecdf(df, cols, key_col="url", low_card_threshold=1)  # all 5 high-card
+        normalize.ecdf(df, cols, low_card_threshold=1)  # all 5 high-card
         .toPandas().set_index("url").sort_index()
     )
     pdf = df.toPandas().set_index("url").sort_index()
@@ -112,7 +112,7 @@ def test_ecdf_reprobe_path_exact(spark):
     df = _ecdf_frames(spark).cache()
     cols = ["n_chars", "mean_word_len"]
     fast = (
-        normalize.ecdf(df, cols, key_col="url", low_card_threshold=1, probe_buckets=16)
+        normalize.ecdf(df, cols, low_card_threshold=1, probe_buckets=16)
         .toPandas().sort_values("url").reset_index(drop=True)
     )
     naive = ecdf_naive(df, cols).toPandas().sort_values("url").reset_index(drop=True)

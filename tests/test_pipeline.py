@@ -5,7 +5,10 @@
 - checkpoint resume (Luigi semantics re-expressed)
 """
 
+import time
+
 import numpy as np
+import pytest
 
 from webdq import oracle
 from webdq.pipeline import PipelineConfig, run_pipeline
@@ -61,7 +64,12 @@ def test_checkpoint_resume(tmp_path, spark):
         m1 = {m["stage"]: m for m in json.load(f)}
     assert not m1["features"].get("skipped")
     assert m1["features"]["rows_out"] == 400
-    assert os.path.exists(os.path.join(wd, "_lineage"))
+    # each stage's lineage rows sum to the rows it wrote
+    lineage = spark.read.parquet(os.path.join(wd, "_lineage")).toPandas()
+    assert set(lineage["stage"]) == {"features", "normalized", "labels"}
+    for stage, rows in lineage.groupby("stage")["rows"].sum().items():
+        assert rows == m1[stage]["rows_out"], stage
+        assert lineage[lineage["stage"] == stage]["partition_id"].is_unique
 
     # resume: feeding an EMPTY pages frame must still reproduce the
     # output because every stage short-circuits to its checkpoint.
@@ -72,6 +80,51 @@ def test_checkpoint_resume(tmp_path, spark):
     assert m2["features"].get("skipped") and m2["normalized"].get("skipped")
     assert (first["keep"] == second["keep"]).all()
     assert (first["scrubbed_text"] == second["scrubbed_text"]).all()
+
+
+def test_stage_runner_scans_written_stage_once(tmp_path, spark):
+    """A checkpointed stage costs its write, the read-back and ONE scan
+    for the per-partition lineage: metrics and the lineage file both
+    come from that scan's collected rows."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from webdq.pipeline import StageRunner
+
+    sc = spark.sparkContext
+    df = spark.range(0, 10_000, 1, 4).select("id", (F.col("id") % 7).alias("g"))
+    runner = StageRunner(spark, str(tmp_path))
+    sc.setJobGroup("stage-runner-run", "StageRunner.run")
+    try:
+        runner.run("stage", lambda: df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed asynchronously, in event order: once a later
+    # job has ended there, every job of the group is recorded
+    sc.setJobGroup("stage-runner-marker", "marker")
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    for _ in range(100):
+        marker = tracker.getJobIdsForGroup("stage-runner-marker")
+        if marker and all(tracker.getJobInfo(j).status == "SUCCEEDED" for j in marker):
+            break
+        time.sleep(0.05)
+    jobs = tracker.getJobIdsForGroup("stage-runner-run")
+    assert len(jobs) <= 4, f"StageRunner.run ran {len(jobs)} Spark jobs"
+
+    (m,) = runner.metrics
+    assert m["rows_out"] == 10_000 and m["partitions"] >= 1
+    lineage = spark.read.parquet(str(tmp_path / "_lineage")).toPandas()
+    assert lineage["rows"].sum() == 10_000 and len(lineage) == m["partitions"]
+    assert m["skew_max_over_mean"] == pytest.approx(lineage["rows"].max() / lineage["rows"].mean())
+    runner.flush_metrics()
+    with open(os.path.join(tmp_path, "metrics.json")) as f:
+        assert json.load(f) == [m]
 
 
 def test_keep_dim_plan_matches_keep_map(spark):

@@ -60,3 +60,24 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS wdq_bucket_a")
         spark.sql("DROP TABLE IF EXISTS wdq_bucket_b")
+
+
+def test_spread_scan_caps_width_by_file_bytes(spark, tmp_path):
+    """min_split_bytes caps the spread width at the scanned bytes (read
+    through the Hadoop FileSystem of each input file) divided by the cap;
+    without it the spread goes to full width."""
+    import os
+
+    path = str(tmp_path / "multi")
+    rows = spark.range(0, 20000, 1, 3).select("id", F.sha2(F.col("id").cast("string"), 256).alias("h"))
+    rows.write.parquet(path)
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(files) == 3
+    nbytes = sum(os.path.getsize(os.path.join(path, f)) for f in files)
+    df = spark.read.parquet(path).coalesce(1)
+    dp = spark.sparkContext.defaultParallelism
+    assert dp >= 4
+    for split in (nbytes // 2, nbytes // 3, nbytes * 2, 1):
+        want = max(1, min(dp, nbytes // split))
+        assert storage.spread_scan(df, min_split_bytes=split).rdd.getNumPartitions() == want, split
+    assert storage.spread_scan(df).rdd.getNumPartitions() == dp

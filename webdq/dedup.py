@@ -329,8 +329,8 @@ def cosine_col(a, b, dim: int | None = None):
       on a pair-join hot path this costs ~16 µs per 64-dim pair.
     - ``dim=k`` (opt-in for fixed-dim corpora): the same arithmetic
       unrolled as explicit left-assoc element_at folds — whole-stage
-      codegen compiles it (measured 316 s → 90 s on a 20M-pair
-      refine, identical outputs). The fold replays the HOF order
+      codegen compiles it (measured 332 s → 72 s on q32 at a 10×
+      fixture, identical outputs). The fold replays the HOF order
       exactly — each accumulator starts at 0.0 and adds terms left to
       right, then dot/(sqrt(na)*sqrt(nb)) — so the doubles are
       bit-for-bit the HOF values. CONTRACT: every array must have

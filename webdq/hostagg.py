@@ -127,7 +127,7 @@ def cluster_hosts(hosts: DataFrame, k: int = 4, pca_components: int = 3,
     """ECDF → min-max+PCA (fused scan) → KMeans over the host table.
     Returns (clustered hosts df, feature cols, km model). Registers
     its internal persist in ``persisted`` for caller-side release."""
-    h = normalize.ecdf(hosts, HOST_ECDF_FEATURES, key_col="host", prefix="u_")
+    h = normalize.ecdf(hosts, HOST_ECDF_FEATURES, prefix="u_")
     # ecdf strips the n_ prefix (n_pages → u_pages); mean_perplexity
     # keeps its name → u_mean_perplexity
     feats = list(HOST_CLUSTER_FEATURES)
@@ -178,7 +178,7 @@ def run_host_pipeline(
 
     ``workdir`` enables the same Luigi-style resumable parquet stages
     (+ per-partition lineage and metrics) as the page pipeline."""
-    from .pipeline import PipelineConfig, StageRunner, extract_features
+    from .pipeline import StageRunner, extract_features
 
     runner = StageRunner(spark, workdir)
     if runner.exists("host_labels"):
@@ -186,7 +186,7 @@ def run_host_pipeline(
         runner.flush_metrics()
         return spark.read.parquet(runner._path("host_labels"))
 
-    feats_df = runner.run("host_features", lambda: extract_features(pages, PipelineConfig(seed=seed)))
+    feats_df = runner.run("host_features", lambda: extract_features(pages))
     hosts = runner.run("host_metadata", lambda: host_metadata(feats_df))
     clustered_hosts, feats, _ = cluster_hosts(
         hosts, k=k, pca_components=pca_components, init_sample=init_sample, seed=seed,

@@ -40,7 +40,6 @@ def ratio_normalize(df: DataFrame, cols: list[str], total_col: str, prefix: str 
 def ecdf(
     df: DataFrame,
     cols: list[str],
-    key_col: str,
     prefix: str = "u_",
     n_buckets: int = 0,
     rel_err: float = 0.01,
@@ -66,7 +65,7 @@ def ecdf(
       n/64.
     Both are exact: ECDF(x) = count(X ≤ x)/N. Nulls rank lowest and
     tie (cume_dist semantics) on every path. Rows are never re-keyed,
-    so ``key_col`` is not read; it stays in the signature for callers.
+    so no key column is needed.
 
     TWO probe jobs total, regardless of feature count (driver
     round-trips are the non-scaling cost at high parallelism):

@@ -5,14 +5,14 @@ output file exists is skipped (/root/reference/osmdq/analysis_tasks.py:36-43
 idiom, every task). Re-expressed here: every stage optionally writes a
 parquet stage table under ``workdir``; on re-run a stage whose output
 exists is READ instead of recomputed — same resume semantics, no Luigi.
-Each checkpointed stage also appends per-partition lineage rows and a
+Each checkpointed stage also writes its per-partition lineage rows and a
 metrics row (north rule: "resumable from checkpoint with per-partition
 lineage + metrics").
 
 Stage graph (reference pipeline traced in SURVEY.md §3.1):
     pages
       → features     (heuristics: pure exprs; langid/perplexity: Arrow UDFs;
-                      scrubbed_text; salted repartition first — host skew)
+                      scrubbed_text)
       → normalized   (ECDF u_* + ratio features; bucketed-parallel exact ECDF)
       → clustered    (min-max scale → covariance/eig PCA → KMeans → cluster)
       → labels       (broadcast cluster→keep join + url, scrubbed_text)
@@ -25,6 +25,8 @@ import os
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,22 +54,19 @@ CLUSTER_FEATURES = [
 
 ECDF_FEATURES = ["n_chars", "n_words", "mean_word_len", "perplexity"]
 
+# Auto PCA component count (pca_components=0) is clamped to this range.
+PCA_KMIN, PCA_KMAX = 3, 8
+
+LINEAGE_SCHEMA = pa.schema([("stage", pa.string()), ("partition_id", pa.int32()), ("rows", pa.int64())])
+
 
 @dataclass
 class PipelineConfig:
     workdir: str | None = None  # None → fully lazy, no checkpoints
     k: int = 5
-    k_auto: bool = False  # True → reference AutoKMeans elbow sweep
-    kmeans_kmin: int = 3
-    kmeans_kmax: int = 8
     pca_components: int = 0  # 0 → auto (cumvar > 70%)
-    pca_kmin: int = 3  # reference clamps auto-k to [3, 12] (BASELINE.md)
-    pca_kmax: int = 8
-    keep_top: int = 1
-    salt_partitions: int | None = None  # None → leave to AQE
     kmeans_max_iter: int = 25
     kmeans_init_sample: int = 4096
-    seed: int = 42
 
 
 class StageRunner:
@@ -104,26 +103,27 @@ class StageRunner:
         df = build()
         df.write.mode("overwrite").parquet(self._path(name))
         out = self.spark.read.parquet(self._path(name))
-        # per-partition lineage: rows per output partition
-        lin = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("stage", F.lit(name))
-            .select("stage", "partition_id", "rows")
+        # per-partition lineage: rows per output partition, from ONE scan
+        # of the written table (at most one row per partition reaches the
+        # driver); the lineage file and the metrics derive from it there
+        rows = dict(sorted(tuple(r) for r in out.groupBy(F.spark_partition_id()).count().collect()))
+        lineage_dir = os.path.join(self.workdir, "_lineage")
+        os.makedirs(lineage_dir, exist_ok=True)
+        pq.write_table(
+            pa.table(
+                {"stage": [name] * len(rows), "partition_id": list(rows), "rows": list(rows.values())},
+                schema=LINEAGE_SCHEMA,
+            ),
+            os.path.join(lineage_dir, f"{name}.parquet"),
         )
-        lin.write.mode("append").parquet(os.path.join(self.workdir, "_lineage"))
-        parts = lin.agg(
-            F.count(F.lit(1)).alias("np"),
-            F.sum("rows").alias("rows"),
-            (F.max("rows") / F.avg("rows")).alias("skew"),
-        ).collect()[0]
+        total = sum(rows.values())
         self.metrics.append(
             {
                 "stage": name,
                 "wall_ms": int((time.time() - t0) * 1000),
-                "rows_out": int(parts["rows"] or 0),
-                "partitions": int(parts["np"]),
-                "skew_max_over_mean": float(parts["skew"] or 0.0),
+                "rows_out": total,
+                "partitions": len(rows),
+                "skew_max_over_mean": max(rows.values()) / (total / len(rows)) if rows else 0.0,
             }
         )
         return out
@@ -135,13 +135,9 @@ class StageRunner:
             json.dump(self.metrics, f, indent=2)
 
 
-def extract_features(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """pages → per-document features + scrubbed text. The salted
-    repartition by url-hash breaks host-level input skew BEFORE the
-    Arrow-UDF stage (north rule; hosts on a web corpus are
-    heavy-tailed, xxhash64(url) is uniform)."""
-    if cfg.salt_partitions:
-        df = df.repartition(cfg.salt_partitions, F.xxhash64("url", F.lit(cfg.seed)))
+def extract_features(df: DataFrame) -> DataFrame:
+    """pages → per-document features + scrubbed text, on the input's
+    own partitioning."""
     df = textstats.char_features(df)
     df = scorers.all_scorer_features(df)  # one fused ArrowEvalPython
     df = scrub(df)
@@ -154,15 +150,13 @@ def extract_features(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return df.drop("html", "text")
 
 
-def normalize_features(df: DataFrame, cfg: PipelineConfig, stats_out: dict | None = None) -> DataFrame:
+def normalize_features(df: DataFrame, stats_out: dict | None = None) -> DataFrame:
     # Numeric-only projection BEFORE the ECDF shuffles: the text and
-    # scrubbed_text payloads must not travel through the melt / window
-    # / pivot / join (they are ~50× the numeric width); scrubbed_text
-    # is joined back once at label emission.
+    # scrubbed_text payloads must not travel through the ECDF windows
+    # (they are ~50× the numeric width); scrubbed_text is joined back
+    # once at label emission.
     numeric = [c for c in df.columns if c not in ("text", "scrubbed_text", "lang", "warc_ts", "html")]
-    df = normalize.ecdf(
-        df.select(*numeric), ECDF_FEATURES, key_col="url", prefix="u_", stats_out=stats_out
-    )
+    df = normalize.ecdf(df.select(*numeric), ECDF_FEATURES, prefix="u_", stats_out=stats_out)
     # reference naming: u_chars not u_n_chars (utils.py:540-541 strips n_)
     return df
 
@@ -188,8 +182,8 @@ def cluster_documents(
         df,
         feats,
         n_components=cfg.pca_components,
-        kmin=cfg.pca_kmin,
-        kmax=cfg.pca_kmax,
+        kmin=PCA_KMIN,
+        kmax=PCA_KMAX,
         key_col="url",
         init_sample=cfg.kmeans_init_sample,
         approx_rows=approx_rows,
@@ -205,17 +199,16 @@ def cluster_documents(
     # fallback when the fused sample was unavailable: pca.n_rows (free
     # metadata from the fit scan) still lets the kmeans init TopK
     # pre-filter by hash range — bitwise-identical sample (ml.py)
-    fit_kw = dict(
-        max_iter=cfg.kmeans_max_iter, init_sample=cfg.kmeans_init_sample, seed=cfg.seed, n_rows=pca.n_rows
+    km = ml.kmeans_fit(
+        proj,
+        pc_cols,
+        k=cfg.k,
+        key_col="url",
+        max_iter=cfg.kmeans_max_iter,
+        init_sample=cfg.kmeans_init_sample,
+        sample_X=sample_X,
+        n_rows=pca.n_rows,
     )
-    if cfg.k_auto:
-        # reference AutoKMeans: sweep k, pick by elbow 2nd derivative
-        best_k, models = ml.auto_kmeans(
-            proj, pc_cols, "url", cfg.kmeans_kmin, cfg.kmeans_kmax, sample_X=sample_X, **fit_kw
-        )
-        km = models[best_k]
-    else:
-        km = ml.kmeans_fit(proj, pc_cols, k=cfg.k, key_col="url", sample_X=sample_X, **fit_kw)
     out = ml.kmeans_assign(proj, pc_cols, km.centers, out="cluster")
     return out, feats, stats, pca, km
 
@@ -234,12 +227,12 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | No
         runner.flush_metrics()
         return spark.read.parquet(runner._path("labels"))
 
-    feats_df = runner.run("features", lambda: extract_features(pages, cfg))
+    feats_df = runner.run("features", lambda: extract_features(pages))
     # nstats carries the ECDF probe's exact row count out of the stage
     # closure (empty on a checkpoint-resume read — the fused init
     # sample then falls back to the separate TopK, same results)
     nstats: dict = {}
-    norm_df = runner.run("normalized", lambda: normalize_features(feats_df, cfg, nstats))
+    norm_df = runner.run("normalized", lambda: normalize_features(feats_df, nstats))
 
     clustered, feats, stats, pca, km = cluster_documents(
         norm_df, cfg, persisted=runner._persisted, approx_rows=nstats.get("n_rows")
@@ -249,7 +242,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | No
     # a PURE PLAN (label_mod.keep_dim_plan): the k-row aggregate +
     # window rank fuse into the label job — no driver collect, one
     # fewer synchronous round trip (the non-scaling cost, VERDICT r1).
-    dim = label_mod.keep_dim_plan(clustered, list(feats), cfg.keep_top)
+    dim = label_mod.keep_dim_plan(clustered, list(feats), keep_top=1)
     labels = (
         clustered.join(F.broadcast(dim), on="cluster", how="left")
         .na.fill({"keep": False})
