@@ -558,3 +558,21 @@ def test_cosine_col_fold_path_bitwise_parity(spark):
         assert struct.pack("<d", r["hof"]) == struct.pack("<d", r["fold"]), (
             r["i"], r["j"], r["hof"], r["fold"])
     assert n_null == 40  # every pair with the null vector
+
+
+def test_cosine_col_fold_rejects_longer_arrays(spark):
+    """The fold reads exactly ``dim`` elements: a longer array must raise
+    a named error instead of being silently truncated, while a null
+    vector keeps its null cosine."""
+    import pytest
+
+    df = spark.createDataFrame(
+        [(1, [1.0] * 64, [2.0] * 64), (2, None, [1.0] * 64), (3, [1.0] * 65, [1.0] * 64), (4, [1.0] * 64, [1.0] * 65)],
+        "id int, a array<double>, b array<double>",
+    )
+    cos = dedup.cosine_col(F.col("a"), F.col("b"), dim=64).alias("c")
+    got = {r["id"]: r["c"] for r in df.filter(F.col("id") <= 2).select("id", cos).collect()}
+    assert got == {1: pytest.approx(1.0), 2: None}
+    for bad in (3, 4):
+        with pytest.raises(Exception, match="COSINE_DIM_EXCEEDED"):
+            df.filter(F.col("id") == bad).select(cos).collect()

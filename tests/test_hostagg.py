@@ -7,8 +7,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from webdq import hostagg, oracle
-from webdq.pipeline import PipelineConfig, extract_features, run_pipeline
+from webdq import hostagg, normalize, oracle
+from webdq.pipeline import PipelineConfig, cluster_documents, extract_features, run_pipeline
 from webdq.synth import generate_pages
 
 
@@ -102,8 +102,8 @@ def test_host_pipeline_checkpoint_resume(tmp_path, spark, host_pages):
     assert first.equals(second)
 
 
-def test_host_broadcast_fallback_identical(spark, host_pages):
-    """Forcing the shuffle-join fallback (threshold=0) must produce
+def test_host_broadcast_fallback_identical(spark, host_pages, monkeypatch):
+    """Forcing the shuffle-join fallback (BROADCAST_HOSTS_MAX=0) must produce
     exactly the labels the broadcast path produces — the guard changes
     the physical join strategy, never the semantics."""
     pages = host_pages.drop("_tier").limit(1000)
@@ -111,8 +111,9 @@ def test_host_broadcast_fallback_identical(spark, host_pages):
         hostagg.run_host_pipeline(spark, pages, k=3, keep_top=1)
         .toPandas().set_index("url").sort_index()
     )
+    monkeypatch.setattr(hostagg, "BROADCAST_HOSTS_MAX", 0)
     b = (
-        hostagg.run_host_pipeline(spark, pages, k=3, keep_top=1, broadcast_hosts_threshold=0)
+        hostagg.run_host_pipeline(spark, pages, k=3, keep_top=1)
         .toPandas().set_index("url").sort_index()
     )
     assert a.equals(b)
@@ -131,7 +132,8 @@ def test_host_col_pathless_and_scheme_case(spark):
 
 
 def test_library_calls_leave_session_conf_alone(spark, host_pages, monkeypatch):
-    """run_pipeline and cluster_hosts run under the caller's conf: a
+    """run_pipeline and the shared clustering chain on the host table
+    run under the caller's conf: a
     ``spark.conf.set`` inside them would be seen by every other query
     running on the same session meanwhile."""
     from pyspark.sql.conf import RuntimeConfig
@@ -145,7 +147,11 @@ def test_library_calls_leave_session_conf_alone(spark, host_pages, monkeypatch):
     labels = run_pipeline(spark, pages, PipelineConfig(k=5))
     assert labels.count() == host_pages.count()
     persisted = []
-    clustered, _, km = hostagg.cluster_hosts(hosts, k=4, persisted=persisted)
+    h = normalize.ecdf(hosts, hostagg.HOST_ECDF_FEATURES, prefix="u_")
+    clustered, _, _, _, km = cluster_documents(
+        h, PipelineConfig(k=4, pca_components=3, kmeans_init_sample=2048), persisted=persisted,
+        feats=hostagg.HOST_CLUSTER_FEATURES, key_col="host", out="host_cluster",
+    )
     assert clustered.count() == hosts.count() and km.centers.shape[0] == 4
     for d in persisted:
         d.unpersist()

@@ -115,7 +115,7 @@ def test_fit_scaled_pca_equals_two_pass(spark):
     cols = ["a", "b", "c"]
     stats1 = ml.column_minmax(df, cols)
     pca1 = ml.fit_pca(ml.minmax_scale(df, cols, stats1), cols, n_components=2)
-    stats2, pca2 = ml.fit_scaled_pca(df, cols, n_components=2)
+    stats2, pca2 = ml.fit_scaled_pca_with_init(df, cols, n_components=2)[:2]
     assert stats1 == stats2
     np.testing.assert_allclose(pca1.mean, pca2.mean, rtol=1e-9)
     np.testing.assert_allclose(pca1.loadings, pca2.loadings, rtol=1e-7, atol=1e-10)
@@ -199,10 +199,12 @@ def test_pipeline_fused_sample_same_kmeans(spark):
     nstats: dict = {}
     norm = P.normalize_features(feats, nstats).persist()
     assert nstats["n_rows"] == 1500
-    out_hint, _, _, _, km_hint = P.cluster_documents(norm, cfg, approx_rows=nstats["n_rows"])
-    out_base, _, _, _, km_base = P.cluster_documents(norm, cfg, approx_rows=None)
+    projections: list = []
+    out_hint, _, _, _, km_hint = P.cluster_documents(norm, cfg, projections, approx_rows=nstats["n_rows"])
+    out_base, _, _, _, km_base = P.cluster_documents(norm, cfg, projections, approx_rows=None)
     np.testing.assert_array_equal(km_hint.centers, km_base.centers)
     a = {r["url"]: r["cluster"] for r in out_hint.select("url", "cluster").collect()}
     b = {r["url"]: r["cluster"] for r in out_base.select("url", "cluster").collect()}
     assert a == b
-    feats.unpersist(); norm.unpersist()
+    for df in [feats, norm, *projections]:
+        df.unpersist()

@@ -82,6 +82,28 @@ def test_checkpoint_resume(tmp_path, spark):
     assert (first["scrubbed_text"] == second["scrubbed_text"]).all()
 
 
+def test_pipelines_release_their_caches(tmp_path, spark):
+    """A long-lived session driving many pipelines must not accrue
+    persisted RDDs: with a workdir every intermediate (PCA projection
+    included) is released; in memory only the returned labels stay."""
+    from webdq import hostagg
+
+    jsc = spark.sparkContext._jsc
+    pages = generate_pages(spark, 400).drop("_tier")
+
+    def added(fn, *args, **kwargs):
+        before = jsc.getPersistentRDDs().size()
+        out = fn(*args, **kwargs)
+        return jsc.getPersistentRDDs().size() - before, out
+
+    cfg = PipelineConfig(k=5, kmeans_init_sample=256, workdir=str(tmp_path / "page"))
+    assert added(run_pipeline, spark, pages, cfg)[0] == 0
+    assert added(hostagg.run_host_pipeline, spark, pages, k=3, workdir=str(tmp_path / "host"))[0] == 0
+    n, labels = added(run_pipeline, spark, pages, PipelineConfig(k=5, kmeans_init_sample=256))
+    labels.unpersist()
+    assert n == 1
+
+
 def test_stage_runner_scans_written_stage_once(tmp_path, spark):
     """A checkpointed stage costs its write, the read-back and ONE scan
     for the per-partition lineage: metrics and the lineage file both

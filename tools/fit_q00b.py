@@ -17,6 +17,7 @@ import os
 import sys
 
 import numpy as np
+from pyspark.sql import functions as F
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -38,20 +39,12 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     minmax = {c: (round(lo, 6), round(hi, 6)) for c, (lo, hi) in raw.items()}
     scaled = ml.minmax_scale(feats, cols, minmax)
 
-    mean, cov, n = ml.covariance(scaled, cols)
-    w, L = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1]
-    L = L[:, order][:, :3]
-    # sign normalization as ml's PCA fit does: max-abs element positive
-    for j in range(L.shape[1]):
-        i = int(np.argmax(np.abs(L[:, j])))
-        if L[i, j] < 0:
-            L[:, j] = -L[:, j]
-    mean_r = [round(float(x), 6) for x in mean]
-    loadings_r = [[round(float(L[i, j]), 6) for j in range(3)] for i in range(len(cols))]
+    pca = ml.fit_pca(scaled, cols, n_components=3)
+    mean_r = [round(float(x), 6) for x in pca.mean]
+    loadings_r = [[round(float(pca.loadings[i, j]), 6) for j in range(3)] for i in range(len(cols))]
 
     model = ml.PCAModel(
-        cols=cols, mean=np.array(mean_r), loadings=np.array(loadings_r), eigvals=w[order]
+        cols=cols, mean=np.array(mean_r), loadings=np.array(loadings_r), eigvals=pca.eigvals
     )
     proj = ml.pca_project(scaled, model).persist()
     pc_cols = ["pc_0", "pc_1", "pc_2"]
@@ -61,8 +54,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     assigned = ml.kmeans_assign(proj, pc_cols, np.array(centers_r))
     dim = label_mod.keep_dim_plan(assigned, cols, keep_top=1)
     keep = sorted(r["cluster"] for r in dim.collect() if r["keep"])
-    sizes = {r["cluster"]: r["n"] for r in assigned.groupBy("cluster").agg(
-        __import__("pyspark.sql.functions", fromlist=["count"]).count("*").alias("n")).collect()}
+    sizes = {r["cluster"]: r["n"] for r in assigned.groupBy("cluster").agg(F.count("*").alias("n")).collect()}
 
     print("# cluster sizes:", sizes)
     print("_Q00B_FROZEN_LITERALS = {")

@@ -334,20 +334,26 @@ def cosine_col(a, b, dim: int | None = None):
       exactly — each accumulator starts at 0.0 and adds terms left to
       right, then dot/(sqrt(na)*sqrt(nb)) — so the doubles are
       bit-for-bit the HOF values. CONTRACT: every array must have
-      exactly ``dim`` elements (ANSI element_at raises past the end;
-      extra elements would be silently ignored). At dim ≫ 64 stage
-      the three folds as separate columns (janino 64 KB, CLAUDE.md).
+      exactly ``dim`` elements — a shorter one raises through ANSI
+      element_at, a longer one raises ``COSINE_DIM_EXCEEDED`` instead
+      of having its tail silently ignored; a null vector still gives a
+      null cosine. At dim ≫ 64 stage the three folds as separate
+      columns (janino 64 KB, CLAUDE.md).
     """
     if dim is not None:
-        def fold(terms):
-            e = F.lit(0.0)
+        def fold(terms, e=F.lit(0.0)):
             for t in terms:
                 e = e + t
             return e
 
         ae = [F.element_at(a, i + 1).cast("double") for i in range(dim)]
         be = [F.element_at(b, i + 1).cast("double") for i in range(dim)]
-        dot = fold([x * y for x, y in zip(ae, be)])
+        # the size guard seeds the dot fold (its value is 0.0): wrapping the
+        # arrays or the result in a CASE instead costs the folds their
+        # subexpression elimination (slower, and janino's 64 KB limit)
+        msg = f"COSINE_DIM_EXCEEDED: cosine_col(dim={dim}) got an array with more elements"
+        guard = F.when((F.size(a) > dim) | (F.size(b) > dim), F.raise_error(F.lit(msg))).otherwise(F.lit(0.0))
+        dot = fold([x * y for x, y in zip(ae, be)], guard)
         na = F.sqrt(fold([x * x for x in ae]))
         nb = F.sqrt(fold([y * y for y in be]))
         return dot / (na * nb)

@@ -108,19 +108,23 @@ def optimal_pca_components(
     return min(max(candidate, nb_min_dim), nb_max_dim)
 
 
-def fit_scaled_pca(
-    df: DataFrame,
-    cols: list[str],
-    n_components: int = 0,
-    kmin: int = 2,
-    kmax: int = 12,
-) -> tuple[dict[str, tuple[float, float]], PCAModel]:
-    """ONE aggregation computes min/max AND raw covariance; the scaled
-    covariance follows analytically (cov_z[i,j] = cov_x[i,j]/(r_i r_j),
-    mean_z = (mean−min)/r). Saves a full scan vs minmax-then-covariance
-    and keeps the min-max → PCA semantics identical (tested)."""
-    stats, model, _ = fit_scaled_pca_with_init(df, cols, n_components=n_components, kmin=kmin, kmax=kmax)
-    return stats, model
+def _eig_components(cov: np.ndarray, n_components: int, kmin: int, kmax: int) -> tuple[np.ndarray, np.ndarray]:
+    """Eigenvalues (descending) and the first ``n_components`` loadings
+    of a covariance matrix; n_components=0 → auto-k clamped to
+    [kmin, min(kmax, d)]. Eigenvector sign is arbitrary (SURVEY.md §7.3
+    item 2): the max-|loading| entry of each component is forced
+    positive."""
+    w, v = np.linalg.eigh(cov)  # ascending
+    order = np.argsort(w)[::-1]
+    w, v = w[order], v[:, order]
+    if n_components <= 0:
+        n_components = optimal_pca_components(pca_variance(w), kmin, min(kmax, cov.shape[0]))
+    L = v[:, :n_components].copy()
+    for j in range(L.shape[1]):
+        i = int(np.argmax(np.abs(L[:, j])))
+        if L[i, j] < 0:
+            L[:, j] = -L[:, j]
+    return w, L
 
 
 def fit_scaled_pca_with_init(
@@ -133,9 +137,12 @@ def fit_scaled_pca_with_init(
     init_sample: int = 0,
     approx_rows: int | None = None,
 ) -> tuple[dict[str, tuple[float, float]], PCAModel, np.ndarray | None]:
-    """fit_scaled_pca PLUS the downstream KMeans init sample, fused
-    into the SAME single aggregation (the driver-synchronous job count
-    is the non-scaling term — VERDICT r3).
+    """ONE aggregation computes min/max AND raw covariance; the scaled
+    covariance follows analytically (cov_z[i,j] = cov_x[i,j]/(r_i r_j),
+    mean_z = (mean−min)/r). Saves a full scan vs minmax-then-covariance
+    and keeps the min-max → PCA semantics identical (tested). The
+    downstream KMeans init sample can ride in the SAME aggregation (the
+    driver-synchronous job count is the non-scaling term — VERDICT r3).
 
     When ``key_col``/``init_sample`` are given and ``approx_rows`` (an
     upstream row-count hint, e.g. the ECDF probe's exact count) dwarfs
@@ -187,16 +194,7 @@ def fit_scaled_pca_with_init(
     cov_z[const, :] = 0.0
     cov_z[:, const] = 0.0
 
-    w, v = np.linalg.eigh(cov_z)
-    order = np.argsort(w)[::-1]
-    w, v = w[order], v[:, order]
-    if n_components <= 0:
-        n_components = optimal_pca_components(pca_variance(w), kmin, min(kmax, len(cols)))
-    L = v[:, :n_components].copy()
-    for j in range(L.shape[1]):
-        i = int(np.argmax(np.abs(L[:, j])))
-        if L[i, j] < 0:
-            L[:, j] = -L[:, j]
+    w, L = _eig_components(cov_z, n_components, kmin, kmax)
     stats = {c: (float(mn[i]), float(mx[i])) for i, c in enumerate(cols)}
     model = PCAModel(cols=list(cols), mean=mean_z, loadings=L, eigvals=w, n_rows=n)
 
@@ -243,18 +241,7 @@ def fit_pca(df: DataFrame, cols: list[str], n_components: int = 0, kmin: int = 2
     automatic selection (the reference's AutoPCA,
     /root/reference/osmdq/analysis_tasks.py:564-635)."""
     mean, cov, n = covariance(df, cols)
-    w, v = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(w)[::-1]
-    w, v = w[order], v[:, order]
-    if n_components <= 0:
-        n_components = optimal_pca_components(pca_variance(w), kmin, min(kmax, len(cols)))
-    L = v[:, :n_components].copy()
-    # Eigenvector sign is arbitrary (SURVEY.md §7.3 item 2): force the
-    # max-|loading| entry of each component positive.
-    for j in range(L.shape[1]):
-        i = int(np.argmax(np.abs(L[:, j])))
-        if L[i, j] < 0:
-            L[:, j] = -L[:, j]
+    w, L = _eig_components(cov, n_components, kmin, kmax)
     return PCAModel(cols=list(cols), mean=mean, loadings=L, eigvals=w, n_rows=n)
 
 

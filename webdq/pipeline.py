@@ -76,7 +76,9 @@ class StageRunner:
         self.spark = spark
         self.workdir = workdir
         self.metrics: list[dict] = []
-        self._persisted: list[DataFrame] = []
+        # frames persisted by run() in in-memory mode and by helpers that
+        # persist internally (cluster_documents); finish() releases them
+        self.persisted: list[DataFrame] = []
 
     def _path(self, name: str) -> str:
         assert self.workdir
@@ -94,7 +96,7 @@ class StageRunner:
             # this frame; without a materialization every iteration would
             # re-run the whole upstream DAG including the Arrow UDFs.
             df = build().persist()
-            self._persisted.append(df)
+            self.persisted.append(df)
             return df
         if self.exists(name):
             self.metrics.append({"stage": name, "skipped": True})
@@ -134,6 +136,32 @@ class StageRunner:
         with open(os.path.join(self.workdir, "metrics.json"), "w") as f:
             json.dump(self.metrics, f, indent=2)
 
+    def resume(self, terminal: str, upstream: tuple[str, ...] = ()) -> DataFrame | None:
+        """Luigi-style short-circuit: if ``terminal`` is checkpointed,
+        nothing runs — it and each existing ``upstream`` stage are marked
+        skipped and the checkpoint is returned. None otherwise."""
+        if not self.exists(terminal):
+            return None
+        for name in (terminal, *upstream):
+            if self.exists(name):
+                self.metrics.append({"stage": name, "skipped": True})
+        self.flush_metrics()
+        return self.spark.read.parquet(self._path(terminal))
+
+    def finish(self, out: DataFrame) -> DataFrame:
+        """Release every persisted frame except ``out`` (materialized
+        first in in-memory mode; a parquet read with a workdir) and flush
+        the metrics: a long-lived session driving many pipelines must not
+        accrue executor memory (VERDICT r1 item 3)."""
+        if not self.workdir:
+            out.count()
+        for df in self.persisted:
+            if df is not out:
+                df.unpersist()
+        self.persisted = [] if self.workdir else [out]
+        self.flush_metrics()
+        return out
+
 
 def extract_features(df: DataFrame) -> DataFrame:
     """pages → per-document features + scrubbed text, on the input's
@@ -162,19 +190,27 @@ def normalize_features(df: DataFrame, stats_out: dict | None = None) -> DataFram
 
 
 def cluster_documents(
-    df: DataFrame, cfg: PipelineConfig, persisted: list | None = None, approx_rows: int | None = None
+    df: DataFrame,
+    cfg: PipelineConfig,
+    persisted: list | None = None,
+    approx_rows: int | None = None,
+    feats: list[str] = CLUSTER_FEATURES,
+    key_col: str = "url",
+    out: str = "cluster",
 ):
-    """min-max → PCA (auto-k) → KMeans. Returns (clustered df, models).
+    """min-max → PCA (auto-k) → KMeans over ``feats``, one row per
+    ``key_col`` (pages by url, hosts by host). Returns (clustered df with
+    cluster column ``out``, feats, stats, pca, km).
     Registers its internal persist in ``persisted`` so the caller can
     release it once the output is materialized. ``approx_rows`` (the
     exact upstream count when known — the ECDF probe surfaces it)
     fuses the KMeans init sample INTO the PCA fit scan: one driver
     round-trip serves minmax + covariance + init sample, with a
     bitwise-identical sample matrix (ml.fit_scaled_pca_with_init)."""
-    missing = [c for c in CLUSTER_FEATURES if c not in df.columns]
+    missing = [c for c in feats if c not in df.columns]
     if missing:
         raise ValueError(f"cluster feature columns missing from input: {missing}")
-    feats = list(CLUSTER_FEATURES)
+    feats = list(feats)
     # one pass: min/max + covariance (scaled covariance derived on the
     # driver) instead of separate minmax and covariance scans — plus
     # the fused init sample when the row-count hint is available
@@ -184,16 +220,16 @@ def cluster_documents(
         n_components=cfg.pca_components,
         kmin=PCA_KMIN,
         kmax=PCA_KMAX,
-        key_col="url",
+        key_col=key_col,
         init_sample=cfg.kmeans_init_sample,
         approx_rows=approx_rows,
     )
     scaled = ml.minmax_scale(df, feats, stats)
     pc_cols = [f"pc_{j}" for j in range(pca.loadings.shape[1])]
     # Lloyd iterations + centroid ranking rescan this frame k×; keep
-    # only (url, features, pc_*) hot — equivalent to the reference
+    # only (key, features, pc_*) hot — equivalent to the reference
     # persisting /individuals between tasks (analysis_tasks.py:632-635).
-    proj = ml.pca_project(scaled, pca).select("url", *feats, *pc_cols).persist()
+    proj = ml.pca_project(scaled, pca).select(key_col, *feats, *pc_cols).persist()
     if persisted is not None:
         persisted.append(proj)
     # fallback when the fused sample was unavailable: pca.n_rows (free
@@ -203,14 +239,13 @@ def cluster_documents(
         proj,
         pc_cols,
         k=cfg.k,
-        key_col="url",
+        key_col=key_col,
         max_iter=cfg.kmeans_max_iter,
         init_sample=cfg.kmeans_init_sample,
         sample_X=sample_X,
         n_rows=pca.n_rows,
     )
-    out = ml.kmeans_assign(proj, pc_cols, km.centers, out="cluster")
-    return out, feats, stats, pca, km
+    return ml.kmeans_assign(proj, pc_cols, km.centers, out=out), feats, stats, pca, km
 
 
 def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
@@ -218,14 +253,9 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | No
     cfg = cfg or PipelineConfig()
     runner = StageRunner(spark, cfg.workdir)
 
-    # Luigi-style resume: if the terminal stage exists, nothing runs.
-    if runner.exists("labels"):
-        runner.metrics.append({"stage": "labels", "skipped": True})
-        for s in ("features", "normalized"):
-            if runner.exists(s):
-                runner.metrics.append({"stage": s, "skipped": True})
-        runner.flush_metrics()
-        return spark.read.parquet(runner._path("labels"))
+    resumed = runner.resume("labels", upstream=("features", "normalized"))
+    if resumed is not None:
+        return resumed
 
     feats_df = runner.run("features", lambda: extract_features(pages))
     # nstats carries the ECDF probe's exact row count out of the stage
@@ -234,8 +264,8 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | No
     nstats: dict = {}
     norm_df = runner.run("normalized", lambda: normalize_features(feats_df, nstats))
 
-    clustered, feats, stats, pca, km = cluster_documents(
-        norm_df, cfg, persisted=runner._persisted, approx_rows=nstats.get("n_rows")
+    clustered, feats, *_ = cluster_documents(
+        norm_df, cfg, persisted=runner.persisted, approx_rows=nstats.get("n_rows")
     )
     # Rank clusters by the mean scaled features of their members
     # (`clustered` feature columns are already min-max scaled). This is
@@ -252,16 +282,4 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig | No
         .join(feats_df.select("url", "scrubbed_text"), on="url", how="inner")
         .select("url", "cluster", "keep", "scrubbed_text")
     )
-    labels = runner.run("labels", lambda: labels)
-    if not cfg.workdir:
-        # runner.run persisted `labels` lazily; materialize it once so
-        # every upstream cache (features, normalized, pca projection)
-        # can be released — a long-lived session driving many pipelines
-        # must not accrue executor memory (VERDICT r1 item 3).
-        labels.count()
-        for df_ in runner._persisted:
-            if df_ is not labels:
-                df_.unpersist()
-        runner._persisted = [labels]
-    runner.flush_metrics()
-    return labels
+    return runner.finish(runner.run("labels", lambda: labels))
